@@ -126,9 +126,9 @@ object Ann {
     * [[graft.expressions.DotProductD]] (L2² = |a|²+|b|²−2a·b with
     * per-row norms computed once) + one argmin window; update = posexplode
     * → per-(cell, dim) avg → reassemble. Centroids are checkpointed per
-    * iteration via [[Checkpoints]] with the superseded round's blocks
-    * freed (k rows — cuts the iterative lineage, never collects the
-    * corpus). NOT hash-checkable cross-engine: float centroid
+    * iteration in a [[Checkpoints.rounds]] scope with the superseded
+    * round's blocks freed (k rows — cuts the iterative lineage, never
+    * collects the corpus). NOT hash-checkable cross-engine: float centroid
     * averaging is partition-order-dependent — same unit-tier status as
     * IVF routing (SURVEY q98 note).
     *
@@ -140,33 +140,35 @@ object Ann {
     require(k >= 1 && iters >= 1, s"k=$k and iters=$iters must be >= 1")
     // init = the k smallest ids via TakeOrderedAndProject (distributed
     // top-k — not a global-window single partition)
-    var centroids = Checkpoints.cut(corpus
-      .select(col(idCol), col(vecCol).as("centroid"))
-      .orderBy(col(idCol).asc).limit(k)
-      .select((row_number().over(Window.orderBy(col(idCol).asc)) - 1)
-        .as("cell"), col("centroid")))
-    val body = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
-      graft.Det.dotD(col(vecCol), col(vecCol)).as("__n2"))
-    var assigned: DataFrame = null
-    var it = 0
-    while (it < iters) {
-      val aw = Window.partitionBy(col("__id"))
-        .orderBy(col("__d2").asc, col("cell").asc)
-      assigned = body.crossJoin(broadcast(centroids))
-        .withColumn("__d2",
-          col("__n2") + graft.Det.dotD(col("centroid"), col("centroid"))
-            - lit(2.0) * graft.Det.dotD(col("__v"), col("centroid")))
-        .withColumn("__rk", row_number().over(aw))
-        .filter(col("__rk") === 1)
-        .select(col("__id"), col("__v"), col("cell"))
-      it += 1
-      if (it < iters) {
-        centroids = Checkpoints.rotate(
-          meanVectors(assigned, col("cell"), col("__v"), "cell", "centroid"),
-          prev = centroids)
+    Checkpoints.rounds(corpus.sparkSession) { r =>
+      var centroids = r.cut(corpus
+        .select(col(idCol), col(vecCol).as("centroid"))
+        .orderBy(col(idCol).asc).limit(k)
+        .select((row_number().over(Window.orderBy(col(idCol).asc)) - 1)
+          .as("cell"), col("centroid")))
+      val body = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"),
+        graft.Det.dotD(col(vecCol), col(vecCol)).as("__n2"))
+      var assigned: DataFrame = null
+      var it = 0
+      while (it < iters) {
+        val aw = Window.partitionBy(col("__id"))
+          .orderBy(col("__d2").asc, col("cell").asc)
+        assigned = body.crossJoin(broadcast(centroids))
+          .withColumn("__d2",
+            col("__n2") + graft.Det.dotD(col("centroid"), col("centroid"))
+              - lit(2.0) * graft.Det.dotD(col("__v"), col("centroid")))
+          .withColumn("__rk", row_number().over(aw))
+          .filter(col("__rk") === 1)
+          .select(col("__id"), col("__v"), col("cell"))
+        it += 1
+        if (it < iters) {
+          centroids = r.step(
+            meanVectors(assigned, col("cell"), col("__v"), "cell", "centroid"),
+            prev = centroids)
+        }
       }
+      assigned.select(col("__id").as(idCol), col("cell"))
     }
-    assigned.select(col("__id").as(idCol), col("cell"))
   }
 
   /** IVF-style search: coarse centroids = per-`coarseKey` mean vectors

@@ -1,8 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.BooleanType
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 /** Lineage-cut discipline for iterative operators (PageRank, BFS,
   * hierarchy flattening, k-core peel, connected components, k-means).
@@ -18,8 +23,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     checkpoint blocks belong to the underlying RDD). Measured: q202's
   *     repeats grew 1.4 s → 5.6 s as blocks accumulated. [[release]]
   *     reaches the `LogicalRDD` leaf the checkpoint planted and unpersists
-  *     the RDD itself; [[rotate]] packages the resulting
-  *     checkpoint-then-free-predecessor loop step.
+  *     the RDD itself.
   *
   *  2. **`localCheckpoint` is non-reliable storage.** On a real cluster an
   *     executor loss mid-iteration is unrecoverable (the lineage was
@@ -29,16 +33,22 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     on the fast local path everywhere else (local mode keeps the JVM,
   *     so local blocks are as durable as the job).
   *
-  * Safety rule callers must follow: only [[release]] a frame once a LATER
-  * eager checkpoint derived from it has materialized, and never release a
-  * frame the operator's RETURNED (lazy) plan still reads — a truncated
-  * lineage cannot recompute freed blocks. In practice most loops follow
-  * the same shape: the returned frame depends only on the final round's
-  * checkpoint, so all predecessors are releasable. The exception is
-  * `Hierarchy.ancestorClosure`, whose returned plan unions EVERY round's
-  * block (each closure pair is materialized exactly once): there the
-  * per-round blocks stay pinned — O(log depth) frames totalling the
-  * closure's bytes — and only the superseded pointer frames are released.
+  * Loops run inside one [[rounds]] scope, which owns the release rule a
+  * truncated lineage imposes — a freed frame cannot be recomputed, so a
+  * frame may only be freed once nothing live reads it:
+  *
+  *  - a round's predecessor is freed once its successor has materialized
+  *    ([[Rounds.step]], [[Rounds.counted]]);
+  *  - on normal exit every frame the scope cut that the RETURNED (lazy)
+  *    plan does not read is freed. Most loops return a plan over their
+  *    final round only; `Hierarchy.ancestorClosure` returns a union of
+  *    every round's block, and those blocks stay pinned — O(log depth)
+  *    frames totalling the closure's bytes;
+  *  - if the body throws, every frame it cut is freed and the exception
+  *    rethrown.
+  *
+  * Frames the returned plan reads stay pinned until the between-queries
+  * [[sweep]]. One-shot cuts outside a loop call [[cut]] directly.
   */
 object Checkpoints {
 
@@ -46,14 +56,15 @@ object Checkpoints {
     * route [[cut]] through reliable checkpoints on cluster profiles. */
   val ReliableConfKey = "graft.checkpoint.reliable"
 
+  private def reliable(spark: SparkSession): Boolean =
+    spark.conf.get(ReliableConfKey, "false").toBoolean
+
   /** Eagerly materialize `ds` and cut its lineage. Local checkpoint by
     * default; reliable `checkpoint` when [[ReliableConfKey]] is true and a
     * checkpoint dir is set (reliable without a dir would throw deep in the
     * job — fail the misconfiguration fast here instead). */
   def cut[T](ds: Dataset[T]): Dataset[T] = {
-    val reliable =
-      ds.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-    if (reliable) {
+    if (reliable(ds.sparkSession)) {
       require(
         ds.sparkSession.sparkContext.getCheckpointDir.isDefined,
         s"$ReliableConfKey=true requires sparkContext.setCheckpointDir")
@@ -66,7 +77,7 @@ object Checkpoints {
       // cached rows instead; MEMORY_AND_DISK so memory pressure spills
       // rather than recomputes. The persist must precede the FIRST
       // physical planning of `ds` (cache substitution happens at plan
-      // time) — true for every cut/rotate call site, which checkpoint
+      // time) — true for every cut call site, which checkpoint
       // freshly-built frames. Unpersisted in `finally`: both jobs have
       // completed by then, and the returned frame reads the checkpoint
       // RDD, not this plan's cache.
@@ -84,18 +95,17 @@ object Checkpoints {
     * by default), so a k-round loop would otherwise strand k full state
     * snapshots on durable storage — the same accumulation defect as the
     * block leak, relocated to the checkpoint volume. Deletion is safe
-    * under the header's rule: callers only release a frame no live plan
-    * reads. */
+    * under the header's rule: only frames no live plan reads are
+    * released. */
   def release(ds: Dataset[_]): Unit =
-    ds.queryExecution.analyzed.collect {
-      case l: LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        l.rdd.getCheckpointFile.foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(
-            ds.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true)
-        }
+    leafRdds(ds).foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(
+          ds.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(path, true)
+      }
     }
 
   /** Free EVERY persisted RDD and Dataset cache in the session — the
@@ -128,144 +138,132 @@ object Checkpoints {
       .foreach(_.unpersist(blocking))
   }
 
-  /** One loop step: eagerly checkpoint `next`, then free its now-
-    * superseded predecessor `prev`. Returns the checkpointed frame. Safe
-    * because [[cut]] is eager — by the time `prev` is freed, `next` no
-    * longer needs it. */
-  def rotate[T](next: Dataset[T], prev: Dataset[_]): Dataset[T] = {
-    val cp = cut(next)
-    release(prev)
-    cp
+  /** Run one iterative operator's loop in a checkpoint scope and return
+    * its result plan. The body keeps its own loop and stop rule and cuts
+    * every frame through `r`; the scope frees them under the header's
+    * rule — on normal exit the frames `body`'s result does not read, on
+    * a throw all of them before the exception propagates. */
+  def rounds[T](spark: SparkSession)(body: Rounds => Dataset[T])
+  : Dataset[T] = {
+    val r = new Rounds(reliable(spark))
+    val out =
+      try body(r)
+      catch { case e: Throwable => r.frames.values.foreach(release); throw e }
+    r.releaseUnread(out)
+    out
   }
 
-  /** [[rotate]] for FIXED-round loops whose state frame is consumed by
-    * exactly ONE downstream reference per round (PageRank's rank frame:
-    * `inflow` reads `pr` once, the recombine produces the next `pr`) and
-    * whose result is materialized by a single caller action.
-    *
-    * On the local profile this is the IDENTITY: the unrolled k-round
-    * plan is linear in k (single reference ⇒ no subtree doubling), one
-    * action executes every round exactly once, and the per-round eager
-    * localCheckpoint bought nothing except k driver round-trips — a
-    * materialization job plus a fresh analysis/planning pass per round,
-    * measured as ~60% of q157's wall at sf0.1 (43 jobs, ~1.5 s of
-    * inter-job driver gaps for ~1.1 s of stage time).
-    *
-    * On the reliable (cluster) profile it keeps the full per-round
-    * checkpoint+release discipline: there the checkpoint is durability —
-    * an executor loss resumes from the last round instead of recomputing
-    * the whole chain — which is exactly the property the executor-kill
-    * gate pins, and worth k materialization jobs on a long job.
-    *
-    * Callers whose state is referenced MORE than once per round (BFS's
-    * union+step reads `dist` twice) must NOT use this without verifying
-    * exchange reuse covers the extra reference — a non-reused second
-    * read doubles per-round work between cuts. */
-  def rotateIfReliable[T](next: Dataset[T], prev: Dataset[_]): Dataset[T] =
-    if (next.sparkSession.conf.get(ReliableConfKey, "false").toBoolean)
-      rotate(next, prev)
-    else next
+  /** The frames one [[rounds]] scope has cut and not yet freed. */
+  final class Rounds private[Checkpoints] (reliable: Boolean) {
+    // keyed by the id of the frame's checkpoint RDD; concurrent, as a
+    // round may materialize independent frames from two threads
+    private[Checkpoints] val frames = TrieMap.empty[Int, Dataset[_]]
 
-  /** [[cut]] that also returns the frame's row count — in the SAME job
-    * as the materialization on the local path (round 12). The iterative
-    * loops all need per-round sizes (convergence checks, and the
-    * driver-count-gated broadcast decisions in [[Escalation.bcastIfSmall]]
-    * — a checkpoint's `LogicalRDD` carries no stats, so Catalyst alone
-    * can never pick a broadcast join inside a loop); paying a separate
-    * count job per round doubled the action count of every loop. Here the
-    * local path plants a LAZY local checkpoint (no job) and runs ONE
-    * `rdd.count()` — computing the plan, persisting the marked blocks,
-    * truncating lineage at job end, and returning n, all in that single
-    * job. The reliable (cluster) path keeps [[cut]]'s persist-then-
-    * checkpoint discipline and counts the checkpointed RDD directly (a
-    * cheap file-backed scan, no SQL agg plan).
-    */
-  def cutCounted[T](ds: Dataset[T]): (Dataset[T], Long) = {
-    val reliable =
-      ds.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-    if (reliable) {
-      val cp = cut(ds)
-      (cp, rddOf(cp).map(_.count()).getOrElse(cp.count()))
-    } else {
-      val cp = ds.localCheckpoint(eager = false)
-      rddOf(cp) match {
-        case Some(rdd) => (cp, rdd.count())
-        case None => // unexpected plan shape — fall back to the 2-job form
-          val c = cut(ds); (c, rddOf(c).map(_.count()).getOrElse(c.count()))
+    /** Materialize `ds` as a frame of this scope, with no predecessor to
+      * free: a loop input, or a round's first state. */
+    def cut[T](ds: Dataset[T]): Dataset[T] =
+      materialize(ds, None, counted = false)._1
+
+    /** One round: materialize `next`, then free `prev` (the superseded
+      * state frame; only blocks this scope cut are touched).
+      *
+      * `lazyLocal` is for FIXED-round loops whose state frame has one
+      * downstream reference per round (PageRank's rank frame; BFS reads
+      * `dist` twice, but both reads end at the same aggregate exchange,
+      * which AQE reuses). On the local profile such a step returns `next`
+      * unmaterialized: the unrolled plan stays linear in rounds, one
+      * caller action runs every round once, and a per-round eager cut
+      * only added k driver round-trips — a job plus a fresh
+      * analysis/planning pass per round, ~60% of q157's wall at sf0.1.
+      * On the reliable profile every round still materializes: there the
+      * checkpoint is durability — an executor loss resumes from the last
+      * round instead of recomputing the chain, which the executor-kill
+      * gate pins. Loops whose plan would grow superlinearly when unrolled
+      * (k-core's lazy unroll cubes its plan) keep the default. */
+    def step[T](next: Dataset[T], prev: Dataset[_],
+                lazyLocal: Boolean = false): Dataset[T] =
+      if (lazyLocal && !reliable) next
+      else {
+        val cp = cut(next)
+        free(prev)
+        cp
       }
+
+    /** Materialize `ds` and return (frame, rows, rows whose boolean
+      * column `flagCol` is true — 0 without one), then free `prev`. Loops
+      * need per-round sizes for convergence checks and for the
+      * driver-count-gated broadcasts of [[Escalation.bcastIfSmall]] (a
+      * checkpoint's `LogicalRDD` carries no stats); a separate count job
+      * per round doubled their driver round-trips. On the local profile
+      * the counts come from the materializing job itself; the reliable
+      * profile counts the checkpointed RDD (a cheap file-backed scan). A
+      * null flag counts as false. */
+    def counted[T](ds: Dataset[T], prev: Option[Dataset[_]] = None,
+                   flagCol: Option[String] = None): (Dataset[T], Long, Long) = {
+      val r = materialize(ds, flagCol, counted = true)
+      prev.foreach(free)
+      r
+    }
+
+    private def materialize[T](ds: Dataset[T], flagCol: Option[String],
+                               counted: Boolean): (Dataset[T], Long, Long) = {
+      val idx = flagCol.fold(-1) { f =>
+        val i = ds.schema.fieldIndex(f)
+        require(ds.schema(i).dataType == BooleanType,
+          s"flag column $f must be boolean, got ${ds.schema(i)}")
+        i
+      }
+      // local: a LAZY checkpoint, so the one job below computes the plan,
+      // persists the marked blocks, truncates lineage at job end and
+      // folds both counts
+      val cp = if (reliable) Checkpoints.cut(ds)
+               else ds.localCheckpoint(eager = false)
+      val rdd = leafRdds(cp) match {
+        case Seq(rdd) => rdd
+        case leaves => throw new IllegalStateException(
+          s"checkpoint planted ${leaves.size} LogicalRDD leaves, expected 1")
+      }
+      // tracked BEFORE the local job runs, so a failing round's partially
+      // stored blocks are freed with the rest
+      frames(rdd.id) = cp
+      if (reliable && !counted) (cp, -1L, -1L)
+      else {
+        val (n, t) = rdd.mapPartitions { it =>
+          var n = 0L; var t = 0L
+          it.foreach { row =>
+            n += 1L
+            if (idx >= 0 && !row.isNullAt(idx) && row.getBoolean(idx)) t += 1L
+          }
+          Iterator.single((n, t))
+        }.fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
+        (cp, n, t)
+      }
+    }
+
+    private def free(prev: Dataset[_]): Unit =
+      leafRdds(prev).flatMap(r => frames.remove(r.id)).foreach(release)
+
+    /** Free every frame `out` does not read: not among its `LogicalRDD`
+      * leaves or their RDD dependencies (a lazily-marked or converted
+      * frame reaches earlier blocks through its lineage). */
+    private[Checkpoints] def releaseUnread(out: Dataset[_]): Unit = {
+      val read = mutable.Set.empty[Int]
+      def walk(rdd: RDD[_]): Unit =
+        if (read.add(rdd.id)) rdd.dependencies.foreach(d => walk(d.rdd))
+      leafRdds(out).foreach(walk)
+      frames.foreach { case (id, f) => if (!read(id)) release(f) }
+      frames.clear()
     }
   }
 
-  /** [[rotate]] returning the new frame's row count ([[cutCounted]]). */
-  def rotateCounted[T](next: Dataset[T], prev: Dataset[_]): (Dataset[T], Long) = {
-    val r = cutCounted(next)
-    release(prev)
-    r
-  }
-
-  /** [[cutCounted]] that ALSO counts rows whose boolean column `flagCol`
-    * is true — still ONE job (round 13). Convergence loops need both the
-    * state size (broadcast gating) and a frontier/settled count per
-    * round; paying a separate filtered-count job doubled every round's
-    * driver round-trips (measured: ~40–80 ms of job gap each at sf0.1).
-    * Here the materializing pass folds both counts per partition. A null
-    * flag counts as false. */
-  def cutCountedFlag[T](ds: Dataset[T],
-                        flagCol: String): (Dataset[T], Long, Long) = {
-    val idx = ds.schema.fieldIndex(flagCol)
-    require(ds.schema(idx).dataType ==
-      org.apache.spark.sql.types.BooleanType,
-      s"cutCountedFlag: $flagCol must be boolean, got ${ds.schema(idx)}")
-    def counts(rdd: org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.catalyst.InternalRow]): (Long, Long) =
-      rdd.mapPartitions { it =>
-        var n = 0L; var t = 0L
-        it.foreach { r =>
-          n += 1L
-          if (!r.isNullAt(idx) && r.getBoolean(idx)) t += 1L
-        }
-        Iterator.single((n, t))
-      }.fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
-    val reliable =
-      ds.sparkSession.conf.get(ReliableConfKey, "false").toBoolean
-    if (reliable) {
-      val cp = cut(ds)
-      rddOf(cp) match {
-        case Some(rdd) => val (n, t) = counts(rdd); (cp, n, t)
-        case None => sys.error("cutCountedFlag: checkpoint left no RDD leaf")
-      }
-    } else {
-      val cp = ds.localCheckpoint(eager = false)
-      rddOf(cp) match {
-        case Some(rdd) =>
-          // one job: computes the plan, persists the lazily-marked
-          // blocks, and folds both counts (same mechanism as cutCounted)
-          val (n, t) = counts(rdd); (cp, n, t)
-        case None => // unexpected plan shape — 2-job fallback
-          val c = cut(ds)
-          val rdd = rddOf(c).getOrElse(
-            sys.error("cutCountedFlag: checkpoint left no RDD leaf"))
-          val (n, t) = counts(rdd); (c, n, t)
-      }
+  private def leafRdds(ds: Dataset[_]): Seq[RDD[InternalRow]] =
+    ds.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRDD => l.rdd
     }
-  }
-
-  /** [[rotate]] returning (frame, rows, rows with `flagCol` true) in one
-    * materializing job ([[cutCountedFlag]]). */
-  def rotateCountedFlag[T](next: Dataset[T], prev: Dataset[_],
-                           flagCol: String): (Dataset[T], Long, Long) = {
-    val r = cutCountedFlag(next, flagCol)
-    release(prev)
-    r
-  }
-
-  private def rddOf(ds: Dataset[_]) =
-    ds.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
 
   /** Storage-block RDD ids currently pinned by `ds`'s checkpoint leaves —
     * test hook for asserting [[release]] actually freed them. */
-  def checkpointRddIds(ds: Dataset[_]): Seq[Int] =
-    ds.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+  def checkpointRddIds(ds: Dataset[_]): Seq[Int] = leafRdds(ds).map(_.id)
 
   // touch the classic package so an accidental cross-module Dataset split
   // (sql-api vs classic) fails to compile here, next to the explanation:

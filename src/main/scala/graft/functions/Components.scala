@@ -89,8 +89,10 @@ object Components {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = edges0.count()
-      if (longTyped) contract(edges0, n, maxIter, localEdgeThreshold, None)
-      else propagationLoop(edges0, n, maxIter)
+      Checkpoints.rounds(pairs.sparkSession) { r =>
+        if (longTyped) contract(r, edges0, n, maxIter, localEdgeThreshold)
+        else propagationLoop(r, edges0, n, maxIter)
+      }
     } finally edges0.unpersist(blocking = false)
   }
 
@@ -169,9 +171,9 @@ object Components {
     * connectivity AND the node set of its input (roots are members, and
     * every node emits a star edge), so the deeper level's labels ARE the
     * answer — no join back up. */
-  private def contract(edgesDf: DataFrame, edgeCount: Long,
-                       levelsLeft: Int, localThreshold: Long,
-                       prevCp: Option[DataFrame]): DataFrame = {
+  private def contract(r: Checkpoints.Rounds, edgesDf: DataFrame,
+                       edgeCount: Long, levelsLeft: Int,
+                       localThreshold: Long): DataFrame = {
     val edges = edgesDf
       .select(col(edgesDf.columns(0)).cast("long").as("_1"),
         col(edgesDf.columns(1)).cast("long").as("_2"))
@@ -183,14 +185,12 @@ object Components {
       // fuzzy-join — whose persist() the caller releases on return, so
       // every downstream action would RE-RUN that pipeline. Once the cut
       // is live, the last contraction level's checkpoint is superseded
-      // and released (blocks AND, on the reliable profile, files — sweep
+      // and freed (blocks AND, on the reliable profile, files — sweep
       // never deletes files); only the result's own checkpoint stays
       // pinned until the session sweep, like every iterative operator's
       // last round (Checkpoints header).
-      val cp = Checkpoints.cut(
-        stars(edges.repartition(1)).toDF("id", "component"))
-      prevCp.foreach(Checkpoints.release)
-      cp
+      r.step(stars(edges.repartition(1)).toDF("id", "component"),
+        prev = edgesDf)
     } else {
       require(levelsLeft > 0,
         "connectedComponents: contraction did not reach the local " +
@@ -202,13 +202,13 @@ object Components {
       // OOMs (the same lineage disease the propagation loop cuts per
       // round). Once this level's checkpoint is live, the parent level's
       // blocks are superseded and freed — the recursion pins at most two
-      // (geometrically shrinking) edge frames at a time. The FINAL
-      // level's checkpoint stays: the lazily-returned base case reads it.
-      val sym = Checkpoints.cut(symmetrize(
+      // (geometrically shrinking) edge frames at a time. (The top level's
+      // `edgesDf` is the caller's persisted input, not a frame of the
+      // scope, so stepping past it frees nothing.)
+      val sym = r.step(symmetrize(
         stars(edges.repartition(
           width(edgeCount, localThreshold), col("_1"))).toDF("s", "t"),
-        "s", "t"))
-      prevCp.foreach(Checkpoints.release)
+        "s", "t"), prev = edgesDf)
       val m = sym.count()
       if (m >= edgeCount * 9 / 10) {
         // Stall: contraction only shrinks where a node's neighborhood is
@@ -218,11 +218,9 @@ object Components {
         // collapsed. Finish it with min-label propagation (node set is
         // preserved through star levels, so its labels ARE the answer).
         // The loop's returned labels read only its OWN final checkpoint,
-        // so sym is superseded once it returns — release it.
-        val out = propagationLoop(sym, m, maxIter = 100)
-        Checkpoints.release(sym)
-        out
-      } else contract(sym, m, levelsLeft - 1, localThreshold, Some(sym))
+        // so the scope frees sym on exit.
+        propagationLoop(r, sym, m, maxIter = 100)
+      } else contract(r, sym, m, levelsLeft - 1, localThreshold)
     }
   }
 
@@ -231,8 +229,8 @@ object Components {
     * join-free change detection, and per-round localCheckpoint lineage
     * cuts. Rounds = component diameter — fine for the small graphs this
     * path serves. */
-  private def propagationLoop(edges0: DataFrame, edgeCount: Long,
-                              maxIter: Int): DataFrame = {
+  private def propagationLoop(r: Checkpoints.Rounds, edges0: DataFrame,
+                              edgeCount: Long, maxIter: Int): DataFrame = {
     val p = width(edgeCount, LocalEdgeThreshold)
     val edges = edges0.repartition(p, col("s"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -240,7 +238,7 @@ object Components {
       // `cp` is the round's checkpoint handle; labels/frontier are lazy
       // views over it, so the PREVIOUS round's blocks are free to release
       // as soon as the new checkpoint materializes
-      var cp = Checkpoints.cut(
+      var cp = r.cut(
         edges.select(col("s").as("id")).distinct()
           .withColumn("component", col("id")))
       var labels = cp
@@ -252,10 +250,10 @@ object Components {
           .join(edges, frontier("id") === edges("s"))
           .select(col("t").as("id"), col("component"), lit(false).as("self"))
         // `adv` marks rows whose label improved this round; counting it
-        // inside the rotate's materializing job (cutCountedFlag) makes
-        // the convergence probe free — the old frontier.limit(1).count()
-        // was a second driver round-trip per round
-        val (next, _, advanced) = Checkpoints.rotateCountedFlag(
+        // inside the step's materializing job makes the convergence probe
+        // free — the old frontier.limit(1).count() was a second driver
+        // round-trip per round
+        val (next, _, advanced) = r.counted(
           labels
             .select(col("id"), col("component"), lit(true).as("self"))
             .union(msgs)
@@ -265,7 +263,7 @@ object Components {
               max(when(col("self"), col("component"))).as("old"))
             .withColumn("adv",
               coalesce(col("component") < col("old"), lit(false))),
-          prev = cp, flagCol = "adv")
+          prev = Some(cp), flagCol = Some("adv"))
         cp = next
         frontier = next.filter(col("adv"))
           .select("id", "component")

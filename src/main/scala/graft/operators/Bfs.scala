@@ -19,10 +19,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: the edge frame is repartitioned by src once and
   * checkpointed; each round shuffles only the reached-set frame
   * (≤ |V| rows) to the edge partitioning and min-combines map-side.
-  * Lineage is cut per round via [[graft.functions.Checkpoints]] (the
-  * q143/q148 rule), with the superseded round's blocks freed — a k-round
-  * run pins one distance frame, not k. Unreached vertices simply never
-  * enter the frame — no sentinel distances to carry.
+  * The rounds run in a [[graft.functions.Checkpoints.rounds]] scope, lazy
+  * on the local profile (the two per-round reads of `dist` end at the
+  * same aggregate exchange, which AQE reuses, so the unrolled plan
+  * executes linearly in rounds) and checkpointed per round, freeing the
+  * superseded round, on the reliable profile — a k-round run pins one
+  * distance frame, not k. Unreached vertices simply never enter the
+  * frame — no sentinel distances to carry.
   */
 object Bfs {
 
@@ -32,27 +35,20 @@ object Bfs {
     */
   def hops(seeds: DataFrame, edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import graft.functions.Checkpoints
-    val e = Checkpoints.cut(
-      edges.select(col("src"), col("dst")).repartition(col("src")))
-    var dist = Checkpoints.cut(seeds.select(col("id"), lit(0L).as("hops")))
-    for (_ <- 1 to rounds) {
-      val step = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("hops") + lit(1L)).as("hops"))
-      // local profile: lazy rounds — dist is read twice per round (union
-      // + step), but both references end at the SAME aggregate exchange,
-      // which AQE reuses, so execution stays linear in rounds; the
-      // per-round checkpoint was k driver round-trips (see
-      // rotateIfReliable). Reliable profile keeps per-round durability.
-      dist = Checkpoints.rotateIfReliable(
-        dist.unionByName(step)
-          .groupBy(col("id")).agg(min(col("hops")).as("hops")),
-        prev = dist)
+    graft.functions.Checkpoints.rounds(seeds.sparkSession) { r =>
+      val e = r.cut(
+        edges.select(col("src"), col("dst")).repartition(col("src")))
+      var dist = r.cut(seeds.select(col("id"), lit(0L).as("hops")))
+      for (_ <- 1 to rounds) {
+        val step = e.join(dist, col("src") === col("id"))
+          .select(col("dst").as("id"), (col("hops") + lit(1L)).as("hops"))
+        dist = r.step(
+          dist.unionByName(step)
+            .groupBy(col("id")).agg(min(col("hops")).as("hops")),
+          prev = dist, lazyLocal = true)
+      }
+      dist
     }
-    if (dist.sparkSession.conf
-        .get(Checkpoints.ReliableConfKey, "false").toBoolean)
-      Checkpoints.release(e)  // lazy local rounds still read e
-    dist
   }
 
   /** Bounded Bellman–Ford: weighted shortest-path distances after
@@ -68,28 +64,24 @@ object Bfs {
     *
     * Scale shape: identical to [[hops]] — edges partitioned by src once,
     * per-round shuffle is the ≤|V|-row frontier frame, min combines
-    * map-side, lineage cut per round.
+    * map-side, same lazy/checkpointed rounds.
     */
   def shortestPaths(seeds: DataFrame, edges: DataFrame,
                     rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import graft.functions.Checkpoints
-    val e = Checkpoints.cut(
-      edges.select(col("src"), col("dst"), col("w")).repartition(col("src")))
-    var dist = Checkpoints.cut(seeds.select(col("id"), lit(0L).as("dist")))
-    for (_ <- 1 to rounds) {
-      val step = e.join(dist, col("src") === col("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      // same lazy-round rule as [[hops]] (exchange reuse covers the
-      // double reference; reliable profile keeps per-round checkpoints)
-      dist = Checkpoints.rotateIfReliable(
-        dist.unionByName(step)
-          .groupBy(col("id")).agg(min(col("dist")).as("dist")),
-        prev = dist)
+    graft.functions.Checkpoints.rounds(seeds.sparkSession) { r =>
+      val e = r.cut(
+        edges.select(col("src"), col("dst"), col("w")).repartition(col("src")))
+      var dist = r.cut(seeds.select(col("id"), lit(0L).as("dist")))
+      for (_ <- 1 to rounds) {
+        val step = e.join(dist, col("src") === col("id"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
+        dist = r.step(
+          dist.unionByName(step)
+            .groupBy(col("id")).agg(min(col("dist")).as("dist")),
+          prev = dist, lazyLocal = true)
+      }
+      dist
     }
-    if (dist.sparkSession.conf
-        .get(Checkpoints.ReliableConfKey, "false").toBoolean)
-      Checkpoints.release(e)  // lazy local rounds still read e
-    dist
   }
 }

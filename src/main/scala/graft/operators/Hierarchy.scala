@@ -26,11 +26,11 @@ import org.apache.spark.sql.functions._
   * sliver of the node set.
   *
   * Lineage discipline: the per-round plan is self-referential, so each
-  * round ends in `localCheckpoint` (the [[graft.functions.Components]]
+  * round is checkpointed (the [[graft.functions.Components]]
   * propagation-loop lesson — persist alone doubles the analysis tree per
   * round until the driver OOMs). Convergence is checked with a count on
-  * the unsettled frontier (one action per round, log-many rounds total —
-  * not a per-row driver loop).
+  * the unsettled frontier, folded into the checkpoint's own job (one
+  * action per round, log-many rounds total — not a per-row driver loop).
   *
   * Cycle safety: rows on a parent cycle (malformed input — no root is
   * reachable) never settle; after `maxIter` rounds they are dropped and
@@ -61,54 +61,53 @@ object Hierarchy {
         when(col(parentCol).isNull, 0L).otherwise(1L).as("depth"),
         col(parentCol).isNull.as("settled"))
     import graft.functions.{Checkpoints, Escalation}
-    // one-job materialize+count; state row count stays n every round
-    // (settled ∪ jumped partitions the node set — t_id is unique, so the
-    // left join is multiplicity-1), so n both seeds the loop and gates
-    // the per-round broadcast below
-    // one-job materialize + BOTH counts (round 13): total n gates the
-    // per-round broadcast, settled count derives the frontier — the old
-    // separate filtered count() doubled each round's driver round-trips
-    val (state0, n, settled0) = Checkpoints.cutCountedFlag(init, "settled")
-    var state = state0
-    var frontier = n - settled0
-    var iter = 0
-    var progressing = true
-    while (frontier > 0 && progressing && iter < maxIter) {
-      // compose pointers: s.anc -> t means s's new ancestor is t.anc at
-      // distance s.depth + t.depth. Only the unsettled frontier joins
-      // (the left side shrinks every round); the lookup side must be the
-      // FULL state — a frontier row's ancestor may itself be settled.
-      // The lookup side is broadcast while it fits (driver-known count —
-      // a checkpoint's LogicalRDD has no stats, so neither Catalyst nor
-      // AQE can avoid the per-round exchanges themselves; see
-      // Escalation.bcastIfSmall): the round then runs as one
-      // checkpoint-read stage, no shuffle, falling back to the SMJ plan
-      // the moment the hierarchy outgrows the cap.
-      val s = state.filter(!col("settled")).as("s")
-      val t = Escalation.bcastIfSmall(
-        state.select(col("id").as("t_id"), col("anc").as("t_anc"),
-          col("depth").as("t_depth"), col("settled").as("t_settled")), n)
-      val jumped = s.join(t, col("s.anc") === col("t_id"), "left").select(
-        col("s.id").as("id"),
-        col("t_anc").as("anc"),
-        (col("s.depth") + col("t_depth")).as("depth"),
-        coalesce(col("t_settled"), lit(false)).as("settled"))
-      val (stateCp, rows, settledN) = Checkpoints.rotateCountedFlag(
-        state.filter(col("settled")).unionByName(jumped), prev = state,
-        flagCol = "settled")
-      state = stateCp
-      val next = rows - settledN
-      // the settled set is monotone (depth ≤ 2^k resolves by round k), so
-      // an unchanged frontier means only cycle/dangling rows remain —
-      // stop now instead of burning the remaining maxIter rounds
-      progressing = next < frontier
-      frontier = next
-      iter += 1
+    Checkpoints.rounds(nodes.sparkSession) { r =>
+      // one job materializes the state and folds BOTH counts: total n
+      // (constant every round — settled ∪ jumped partitions the node set,
+      // and t_id is unique, so the left join is multiplicity-1) gates the
+      // per-round broadcast below, the settled count derives the frontier
+      val (state0, n, settled0) =
+        r.counted(init, flagCol = Some("settled"))
+      var state = state0
+      var frontier = n - settled0
+      var iter = 0
+      var progressing = true
+      while (frontier > 0 && progressing && iter < maxIter) {
+        // compose pointers: s.anc -> t means s's new ancestor is t.anc at
+        // distance s.depth + t.depth. Only the unsettled frontier joins
+        // (the left side shrinks every round); the lookup side must be the
+        // FULL state — a frontier row's ancestor may itself be settled.
+        // The lookup side is broadcast while it fits (driver-known count —
+        // a checkpoint's LogicalRDD has no stats, so neither Catalyst nor
+        // AQE can avoid the per-round exchanges themselves; see
+        // Escalation.bcastIfSmall): the round then runs as one
+        // checkpoint-read stage, no shuffle, falling back to the SMJ plan
+        // the moment the hierarchy outgrows the cap.
+        val s = state.filter(!col("settled")).as("s")
+        val t = Escalation.bcastIfSmall(
+          state.select(col("id").as("t_id"), col("anc").as("t_anc"),
+            col("depth").as("t_depth"), col("settled").as("t_settled")), n)
+        val jumped = s.join(t, col("s.anc") === col("t_id"), "left").select(
+          col("s.id").as("id"),
+          col("t_anc").as("anc"),
+          (col("s.depth") + col("t_depth")).as("depth"),
+          coalesce(col("t_settled"), lit(false)).as("settled"))
+        val (stateCp, rows, settledN) = r.counted(
+          state.filter(col("settled")).unionByName(jumped),
+          prev = Some(state), flagCol = Some("settled"))
+        state = stateCp
+        val next = rows - settledN
+        // the settled set is monotone (depth ≤ 2^k resolves by round k), so
+        // an unchanged frontier means only cycle/dangling rows remain —
+        // stop now instead of burning the remaining maxIter rounds
+        progressing = next < frontier
+        frontier = next
+        iter += 1
+      }
+      if (frontier > 0) onUnresolved(frontier)
+      state.filter(col("settled"))
+        .select(col("id"), col("anc").as("root"), col("depth"))
     }
-    if (frontier > 0) onUnresolved(frontier)
-    val out = state.filter(col("settled"))
-      .select(col("id"), col("anc").as("root"), col("depth"))
-    out
   }
 
   /** Ancestor transitive closure — every (descendant, ancestor) pair
@@ -150,64 +149,63 @@ object Hierarchy {
     // P = the exact 2^k-step pointer. k = 0 ⇒ A holds self-pairs only.
     //
     // Round 12 shape: A is kept as a LIST of per-round checkpointed
-    // blocks instead of one re-checkpointed union — the old
-    // `rotate(a ∪ lifted)` re-MATERIALIZED the whole closure every round
-    // (Σₖ|Aₖ| ≈ log·|closure| block writes); appending only the new
-    // lifted block writes each closure pair exactly once. The P side is
-    // broadcast while it fits (driver-known count; checkpoints carry no
-    // stats — Escalation.bcastIfSmall), so a round's two joins are
-    // exchange-free block scans at fixture scale and fall back to SMJ
-    // past the cap. Total pinned storage is unchanged (the closure).
+    // blocks instead of one re-checkpointed union — re-materializing
+    // `a ∪ lifted` every round wrote Σₖ|Aₖ| ≈ log·|closure| block rows;
+    // appending only the new lifted block writes each closure pair exactly
+    // once. The P side is broadcast while it fits (driver-known count;
+    // checkpoints carry no stats — Escalation.bcastIfSmall), so a round's
+    // two joins are exchange-free block scans at fixture scale and fall
+    // back to SMJ past the cap. Total pinned storage is unchanged (the
+    // closure); the scope frees the last P pointers, which the returned
+    // union does not read.
     import graft.functions.{Checkpoints, Escalation}
-    var parts = List(Checkpoints.cut(self))
-    var (p, pSize) = Checkpoints.cutCounted(step)
-    var iter = 0
-    while (pSize > 0 && iter < maxIter) {
-      // v -(2^k)-> mid -(d < 2^k)-> anc  ⇒  v -(2^k + d)-> anc, covering
-      // exactly the new distance block [2^k, 2^{k+1}) once per pair (the
-      // d = 0 self-pair contributes the bare 2^k jump itself)
-      val pJump = Escalation.bcastIfSmall(
-        p.select(col("descd"), col("anc").as("mid")), pSize)
-      val p2 = pJump
-        .join(p.select(col("descd").as("mid"), col("anc")), "mid")
-        .select(col("descd"), col("anc"))
-      val prevP = p
-      val a = parts.reduceLeft(_ unionByName _)
-      val lifted = pJump
-        .join(a.select(col("descd").as("mid"), col("anc")), "mid")
-        .select(col("descd"), col("anc"))
-      // p2 and lifted are mutually independent (both read pJump + already-
-      // materialized frames), so their materializations OVERLAP (guide
-      // §2.6: concurrent jobs back-fill each other's straggler tails) —
-      // serially they were the round's two dominant wall segments. On a
-      // parent CYCLE the lifted block materializes concurrently before
-      // the plateau check fires; it is discarded with the exception (the
-      // closure is never returned), so the fail-fast contract — no
-      // wrapped pair ever reaches a RETURNED frame — is unchanged.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fP = Future(Checkpoints.cutCounted(p2))
-      val fLifted = Future(Checkpoints.cut(lifted))
-      val (pCp, pNext) = Await.result(fP, Duration.Inf)
-      val liftedCp = Await.result(fLifted, Duration.Inf)
-      p = pCp
-      // acyclic input ⇒ |P| strictly shrinks while nonempty (see scaladoc);
-      // a plateau is a parent cycle — fail before unioning wrapped pairs
-      if (pNext >= pSize)
-        throw new IllegalArgumentException(
-          s"ancestorClosure: parent cycle detected (2^$iter-step pointer " +
-            s"count $pSize -> $pNext did not shrink); input must be acyclic")
-      parts = liftedCp :: parts
-      Checkpoints.release(prevP)
-      pSize = pNext
-      iter += 1
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    Checkpoints.rounds(nodes.sparkSession) { r =>
+      var parts = List(r.cut(self))
+      var (p, pSize, _) = r.counted(step)
+      var deadP: Option[DataFrame] = None // last round's P: nothing reads it
+      var iter = 0
+      while (pSize > 0 && iter < maxIter) {
+        // v -(2^k)-> mid -(d < 2^k)-> anc  ⇒  v -(2^k + d)-> anc, covering
+        // exactly the new distance block [2^k, 2^{k+1}) once per pair (the
+        // d = 0 self-pair contributes the bare 2^k jump itself)
+        val pJump = Escalation.bcastIfSmall(
+          p.select(col("descd"), col("anc").as("mid")), pSize)
+        val p2 = pJump
+          .join(p.select(col("descd").as("mid"), col("anc")), "mid")
+          .select(col("descd"), col("anc"))
+        val a = parts.reduceLeft(_ unionByName _)
+        val lifted = pJump
+          .join(a.select(col("descd").as("mid"), col("anc")), "mid")
+          .select(col("descd"), col("anc"))
+        // p2 and lifted are independent (both read P and materialized
+        // blocks), so their jobs overlap — serial measured 1.55 → 1.91 s
+        // on q148 at sf0.1, 4 cores. Both are awaited before a failure
+        // propagates, so no job outlives the round and the scope frees
+        // every frame either produced. P itself is freed one round late,
+        // once neither job can still read it.
+        val fLifted = Future(r.cut(lifted))
+        val fP = Future(r.counted(p2, prev = deadP))
+        Seq(fLifted, fP).foreach(Await.ready(_, Duration.Inf))
+        val liftedCp = fLifted.value.get.get
+        val (pNext, nNext, _) = fP.value.get.get
+        // acyclic input ⇒ |P| strictly shrinks while nonempty (see
+        // scaladoc); a plateau is a parent cycle — fail before unioning
+        // wrapped pairs (the scope frees every block on the way out)
+        if (nNext >= pSize)
+          throw new IllegalArgumentException(
+            s"ancestorClosure: parent cycle detected (2^$iter-step pointer " +
+              s"count $pSize -> $nNext did not shrink); input must be acyclic")
+        parts = liftedCp :: parts
+        deadP = Some(p)
+        p = pNext
+        pSize = nNext
+        iter += 1
+      }
+      parts.reduceLeft(_ unionByName _)
     }
-    // the returned plan reads ONLY the part blocks — the final P pointer
-    // (empty on normal exit) is dead weight; free it rather than pinning
-    // an extra frame for the session (r12 ADVICE)
-    Checkpoints.release(p)
-    parts.reduceLeft(_ unionByName _)
   }
 
   /** The deterministic customer referral forest both declared hierarchy

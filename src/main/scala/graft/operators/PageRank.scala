@@ -21,11 +21,13 @@ import org.apache.spark.sql.functions._
   * and localCheckpoint'd — each of the k rounds then shuffles only the
   * |V|-sized rank frame to the edge partitioning, aggregates partial
   * in-flows map-side (integer sum combines), and left-joins back to the
-  * node list so flow-less nodes decay to the damping floor. Lineage is
-  * cut every round via [[graft.functions.Checkpoints]] (the q143/q148
-  * rule: an iterated plan without checkpoints re-executes every prior
-  * round per action), and each round FREES the superseded round's
-  * checkpoint blocks — a k-round run pins one rank frame, not k. k is a
+  * node list so flow-less nodes decay to the damping floor. The rounds
+  * run in a [[graft.functions.Checkpoints.rounds]] scope: on the local
+  * profile they stay lazy — the rank frame is read once per round, so the
+  * unrolled plan is linear in k and one action runs each round once — and
+  * the run pins only the three loop inputs; on the reliable (cluster)
+  * profile every round is checkpointed for durability and frees its
+  * predecessor, so a k-round run pins one rank frame, not k. k is a
   * parameter, not a convergence loop — fixed work, fixed result.
   */
 object PageRank {
@@ -40,42 +42,27 @@ object PageRank {
     */
   def ranks(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    import graft.functions.Checkpoints
-    val v = Checkpoints.cut(nodes.select(col("id")))
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edgeDeg = Checkpoints.cut(
-      edges.join(deg, "src")
-        .select(col("src"), col("dst"), col("deg"))
-        .repartition(col("src")))
-    var pr = Checkpoints.cut(v.select(col("id"), lit(Scale).as("pr")))
-    for (_ <- 1 to iters) {
-      val inflow = edgeDeg.join(pr, col("src") === col("id"))
-        .select(col("dst"), expr("pr div deg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("insum"))
-      // per-round checkpoint only on the reliable (cluster) profile —
-      // `pr` is single-reference per round, so the unrolled local plan
-      // is linear and one action runs each round once; the local eager
-      // checkpoint was pure driver overhead (see rotateIfReliable)
-      pr = Checkpoints.rotateIfReliable(
-        v.join(inflow, col("id") === col("dst"), "left")
-          .select(col("id"),
-            (lit(Scale * 15L / 100L) +
-              expr("(85 * coalesce(insum, CAST(0 AS BIGINT))) div 100"))
-              .as("pr")),
-        prev = pr)
+    graft.functions.Checkpoints.rounds(nodes.sparkSession) { r =>
+      val v = r.cut(nodes.select(col("id")))
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val edgeDeg = r.cut(
+        edges.join(deg, "src")
+          .select(col("src"), col("dst"), col("deg"))
+          .repartition(col("src")))
+      var pr = r.cut(v.select(col("id"), lit(Scale).as("pr")))
+      for (_ <- 1 to iters) {
+        val inflow = edgeDeg.join(pr, col("src") === col("id"))
+          .select(col("dst"), expr("pr div deg").as("c"))
+          .groupBy(col("dst")).agg(sum(col("c")).as("insum"))
+        pr = r.step(
+          v.join(inflow, col("id") === col("dst"), "left")
+            .select(col("id"),
+              (lit(Scale * 15L / 100L) +
+                expr("(85 * coalesce(insum, CAST(0 AS BIGINT))) div 100"))
+                .as("pr")),
+          prev = pr, lazyLocal = true)
+      }
+      pr.select(col("id"), col("pr").as("pr_micro"))
     }
-    // Reliable profile: the final rank frame is materialized, the
-    // returned plan reads only its checkpoint, so the loop inputs are
-    // releasable here. Local profile: the rounds stayed LAZY
-    // (rotateIfReliable), the returned plan still reads v and edgeDeg —
-    // releasing their localCheckpoint blocks now would strand a plan
-    // whose lineage cannot recompute them; the between-queries sweep
-    // reclaims them instead.
-    if (pr.sparkSession.conf
-        .get(Checkpoints.ReliableConfKey, "false").toBoolean) {
-      Checkpoints.release(v)
-      Checkpoints.release(edgeDeg)
-    }
-    pr.select(col("id"), col("pr").as("pr_micro"))
   }
 }

@@ -410,9 +410,8 @@ object ScalarQueries {
     * Scale shape: edges derive once (cell-blocked geo join, q139's
     * bounded fan-out) and are checkpointed; each round is one two-phase
     * degree agg + two same-key joins on a monotonically SHRINKING edge
-    * frame, with a per-round lineage cut (the q143/q157/q159 iterative
-    * discipline). Six rounds = six bounded shuffles regardless of
-    * corpus size.
+    * frame, with a per-round lineage cut (the q143 iterative discipline).
+    * Six rounds = six bounded shuffles regardless of corpus size.
     */
   def q202_kcore_peel(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.Geo
@@ -423,30 +422,34 @@ object ScalarQueries {
           expr("cast(((c_custkey div 10) div 50) % 30 as double)") * lit(0.03),
           expr("cast((c_custkey div 10) % 50 as double)") * lit(0.03))
           .as("loc"))
-    import graft.functions.Checkpoints
-    // cut BEFORE the symmetrizing union (round 12): the old shape cut the
-    // union, so its materialization ran the cell join's merge + haversine
-    // once per branch; cut first, the trig runs once and the union cut
-    // reads checkpointed rows
-    val und = Checkpoints.cut(
-      geoPairs(pts, 8000L, maxAbsLatDeg = 0.87)
-        .select(col("id_a"), col("id_b")))
-    var e = Checkpoints.rotate(
-      und.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionByName(und.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      prev = und)
-    for (_ <- 1 to 6) {
-      val v = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= 10).select(col("src").as("id"))
-      e = Checkpoints.rotate(
-        e.join(v.select(col("id").as("src")), Seq("src"))
-          .join(v.select(col("id").as("dst")), Seq("dst"))
-          .select(col("src"), col("dst")),
-        prev = e)
+    // per-round steps, never lazy: each round reads `e` three times
+    // (directly and twice through `v`), so an unrolled peel's plan cubes
+    // (1.1 → 12.5 s measured)
+    graft.functions.Checkpoints.rounds(spark) { r =>
+      // cut BEFORE the symmetrizing union (round 12): the old shape cut the
+      // union, so its materialization ran the cell join's merge + haversine
+      // once per branch; cut first, the trig runs once and the union cut
+      // reads checkpointed rows
+      val und = r.cut(
+        geoPairs(pts, 8000L, maxAbsLatDeg = 0.87)
+          .select(col("id_a"), col("id_b")))
+      var e = r.step(
+        und.select(col("id_a").as("src"), col("id_b").as("dst"))
+          .unionByName(und.select(col("id_b").as("src"), col("id_a").as("dst"))),
+        prev = und)
+      for (_ <- 1 to 6) {
+        val v = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
+          .filter(col("d") >= 10).select(col("src").as("id"))
+        e = r.step(
+          e.join(v.select(col("id").as("src")), Seq("src"))
+            .join(v.select(col("id").as("dst")), Seq("dst"))
+            .select(col("src"), col("dst")),
+          prev = e)
+      }
+      e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .select(col("src").as("id"), col("deg"))
+        .orderBy(col("id"))
     }
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("id"), col("deg"))
-      .orderBy(col("id"))
   }
 
   val oracle: Map[String, String] = Map(

@@ -103,10 +103,14 @@ class HierarchySpec extends SparkSpec {
     // so every further round would re-add existing (descd, anc) pairs —
     // the guard must raise before any duplicate row is unioned
     val nodes = Seq((5L, Some(6L)), (6L, Some(5L))).toDF("id", "parent")
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = pinned
     val e = intercept[IllegalArgumentException] {
       Hierarchy.ancestorClosure(nodes, "id", "parent", maxIter = 8).count()
     }
     assert(e.getMessage.contains("cycle"))
+    // the failed closure strands none of its checkpoint blocks
+    assert((pinned -- before).isEmpty, s"left ${pinned -- before} pinned")
   }
 
   test("closure emits each pair exactly once (no duplicate rows) on a " +

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** The r6-measured leak: a k-round iterative loop that `localCheckpoint`s
   * per round strands k state frames in storage memory (q202 bench repeats
   * grew 1.4 s → 5.6 s). These tests pin the fix at both layers — the
-  * [[Checkpoints]] primitives free exactly the superseded blocks, and the
-  * refactored iterative operators pin O(1) frames regardless of round
-  * count (asserted against `sparkContext.getPersistentRDDs`, the storage
+  * [[Checkpoints]] primitives and the [[Checkpoints.rounds]] scope free
+  * exactly the superseded blocks (also when a round throws), and the
+  * iterative operators pin O(1) frames regardless of round count
+  * (asserted against `sparkContext.getPersistentRDDs`, the storage
   * registry the blocks live in). Exception: `ancestorClosure` returns a
   * union of per-round blocks and therefore pins O(log depth) FRAMES whose
   * total bytes equal the closure — the O(1)-frames rule bounds storage,
@@ -39,14 +40,40 @@ class CheckpointsSpec extends SparkSpec {
   test("rotate frees the predecessor and keeps the successor usable") {
     import spark.implicits._
     sweep()
-    var state = Checkpoints.cut((1 to 10).toDF("n"))
-    val firstId = Checkpoints.checkpointRddIds(state).head
-    for (_ <- 1 to 4)
-      state = Checkpoints.rotate(state.withColumn("n", $"n" + 1), state)
+    var firstId = -1
+    val state = Checkpoints.rounds(spark) { r =>
+      var state = r.cut((1 to 10).toDF("n"))
+      firstId = Checkpoints.checkpointRddIds(state).head
+      for (_ <- 1 to 4)
+        state = r.step(state.withColumn("n", $"n" + 1), prev = state)
+      state
+    }
     assert(!persistedIds.contains(firstId), "superseded checkpoint leaked")
     // only the final round's frame is pinned
-    assert(Checkpoints.checkpointRddIds(state).forall(persistedIds.contains))
+    assert(persistedIds == Checkpoints.checkpointRddIds(state).toSet)
     assert(state.agg(min($"n")).as[Int].head() == 5)
+  }
+
+  test("a round that throws mid-loop leaves nothing pinned") {
+    import spark.implicits._
+    sweep()
+    val before = persistedIds
+    var rounds = 0
+    intercept[Exception] {
+      Checkpoints.rounds(spark) { r =>
+        var state = r.cut((1 to 10).toDF("n"))
+        for (i <- 1 to 5) {
+          // round 3's materializing job fails on its executors
+          val n = if (i == 3) raise_error(lit("boom")).cast("int") else $"n" + 1
+          state = r.step(state.withColumn("n", n), prev = state)
+          rounds += 1
+        }
+        state
+      }
+    }
+    assert(rounds == 2)
+    assert((persistedIds -- before).isEmpty,
+      s"a failed loop left ${persistedIds -- before} pinned")
   }
 
   test("release on a never-checkpointed frame is a no-op") {
@@ -88,9 +115,12 @@ class CheckpointsSpec extends SparkSpec {
       walk(dir.toFile).filter(_.getName.startsWith("rdd-")).map(_.getName)
     }
     try {
-      var state = Checkpoints.cut((1 to 10).toDF("n"))
-      for (_ <- 1 to 4)
-        state = Checkpoints.rotate(state.withColumn("n", $"n" + 1), state)
+      val state = Checkpoints.rounds(spark) { r =>
+        var state = r.cut((1 to 10).toDF("n"))
+        for (_ <- 1 to 4)
+          state = r.step(state.withColumn("n", $"n" + 1), prev = state)
+        state
+      }
       // only the live round's files remain; 4 superseded dirs are gone
       assert(rddDirs.size == 1,
         s"superseded checkpoint files leaked: $rddDirs")
@@ -111,10 +141,10 @@ class CheckpointsSpec extends SparkSpec {
     val pr = PageRank.ranks(nodes, edges, iters = 6)
     assert(pr.count() == 6)
     // CONSTANT in rounds, not O(rounds): on the local profile the rounds
-    // are lazy (rotateIfReliable — round 13), so exactly the three loop
+    // are lazy (`step(lazyLocal = true)`), so exactly the three loop
     // INPUT frames stay pinned (v, edgeDeg, the initial rank frame)
-    // whether the loop ran 6 rounds or 600; the reliable profile rotates
-    // and releases per round as before (covered above)
+    // whether the loop ran 6 rounds or 600; on the reliable profile each
+    // round materializes and frees its predecessor (covered above)
     assert(persistedIds.size <= 3,
       s"PageRank pinned ${persistedIds.size} frames after 6 rounds")
     sweep()
@@ -143,8 +173,9 @@ class CheckpointsSpec extends SparkSpec {
     // written exactly once — the alternative (re-checkpointing the
     // growing union every round) re-materializes Σₖ|Aₖ| ≈ log·|closure|
     // rows. Total pinned BYTES equal the closure either way; only the
-    // frame count differs. The final P pointer is released inside the
-    // loop. Depth-4 chain ⇒ 3 rounds ⇒ 1 + 3 = 4 blocks.
+    // frame count differs. The scope frees the last P pointers, which
+    // the returned union does not read. Depth-4 chain ⇒ 3 rounds ⇒
+    // 1 + 3 = 4 blocks.
     assert(persistedIds.size <= 4,
       s"ancestorClosure pinned ${persistedIds.size} frames " +
         "(expected 1 self block + 1 per round, final P released)")

@@ -173,9 +173,13 @@ class ComponentsSpec extends SparkSpec {
     // string-typed ids force the propagation loop; a 10-node path cannot
     // converge in 2 rounds
     val path = (0L until 9L).map(i => (f"$i%03d", f"${i + 1}%03d"))
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = pinned
     intercept[IllegalArgumentException] {
       Components.connectedComponents(path.toDF("a", "b"), "a", "b",
         maxIter = 2).collect()
     }
+    // the failed loop strands none of its checkpoint blocks
+    assert((pinned -- before).isEmpty, s"left ${pinned -- before} pinned")
   }
 }
