@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -123,43 +124,34 @@ object Tables {
     * (earlier fixture generations) are read as epoch-nanos longs and
     * truncated toward zero via integer `DIV 1000` — bit-identical to
     * DuckDB's ns→µs truncation when it reads the same file, so timestamps
-    * hash-match across engines either way. The footer decides, cached
-    * per path (one driver-side footer read per fixture dir).
+    * hash-match across engines either way. The footer decides: one
+    * driver-side read per call ([[Sources.parquetSchema]]), no Spark job
+    * and nothing cached, so a fixture regenerated in place with the
+    * other encoding is seen at once.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    // flip nanosAsLong only for this read, then restore — the flag is
-    // session-global and would otherwise silently retype any later
-    // nanos-timestamp parquet read (same save/restore as Catalog.list)
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try {
-      val path = s"$sfDir/events.parquet"
-      // cache key carries the path's mtime so a fixture regenerated
-      // in-place with the OTHER ts encoding is re-probed, not read with a
-      // stale schema (LongType nanos as TimestampType or vice versa);
-      // clearTsEncodingCache() is the hook for harnesses that rewrite
-      // fixtures without touching the top-level mtime
-      val nanosOnDisk = tsEncodingCache.getOrElseUpdate(
-        (path, new java.io.File(path).lastModified()),
-        spark.read.parquet(path)
-          .schema.fields.exists(f => f.name == "ts" && f.dataType == LongType))
-      if (nanosOnDisk)
+    val path = s"$sfDir/events.parquet"
+    val nanosOnDisk = Sources
+      .parquetSchema(spark, path, Sources.nanosAsLongConf(spark))
+      .fields.exists(f => f.name == "ts" && f.dataType == LongType)
+    if (!nanosOnDisk) read(spark, sfDir, "events", eventsSchema)
+    else {
+      // flip nanosAsLong only for this read, then restore — the flag is
+      // session-global and would otherwise silently retype any later
+      // nanos-timestamp parquet read
+      val key = "spark.sql.legacy.parquet.nanosAsLong"
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, "true")
+      try {
         read(spark, sfDir, "events", eventsRawSchema)
           .withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
           .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      else
-        read(spark, sfDir, "events", eventsSchema)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      } finally prior match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     }
   }
-  private val tsEncodingCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Boolean]
-  /** Drop cached ts-encoding probes (for harnesses that rewrite a fixture
-    * dir in-place within one JVM without changing its mtime). */
-  def clearTsEncodingCache(): Unit = tsEncodingCache.clear()
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     read(spark, sfDir, "documents", documentsSchema)
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =

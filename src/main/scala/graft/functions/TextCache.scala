@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.Tables
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.concurrent.TrieMap
@@ -247,7 +248,7 @@ object TextCache {
       s"$fp/$form-v$FormLayoutVersion"
     val dest = new org.apache.hadoop.fs.Path(destStr)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dest)) return spark.read.parquet(destStr)
+    if (fs.exists(dest)) return Sources.readParquet(spark, destStr)
     val lock = new org.apache.hadoop.fs.Path(destStr + ".lock")
     // PortalSync discipline: only already-exists means "held"
     val acquired =
@@ -261,7 +262,8 @@ object TextCache {
       }
     if (acquired) {
       try {
-        if (fs.exists(dest)) spark.read.parquet(destStr) // raced a winner
+        if (fs.exists(dest)) // raced a winner
+          Sources.readParquet(spark, destStr)
         else {
           val tmp = new org.apache.hadoop.fs.Path(
             s"${dest.getParent}/.build-$form-v$FormLayoutVersion-" +
@@ -289,7 +291,7 @@ object TextCache {
           Option(stale).getOrElse(Array.empty)
             .filter(st => now - st.getModificationTime > 3600000L)
             .foreach(st => fs.delete(st.getPath, true))
-          spark.read.parquet(destStr)
+          Sources.readParquet(spark, destStr)
         }
       } finally { fs.delete(lock, false); () }
     } else {
@@ -298,7 +300,7 @@ object TextCache {
       val deadline = System.nanoTime() + waitMs * 1000000L
       while (!fs.exists(dest) && System.nanoTime() < deadline)
         Thread.sleep(50)
-      if (fs.exists(dest)) spark.read.parquet(destStr)
+      if (fs.exists(dest)) Sources.readParquet(spark, destStr)
       else {
         System.err.println(s"[textcache] shared build of $form is locked " +
           s"by $lock and no artifact appeared within ${waitMs} ms — " +
@@ -316,7 +318,7 @@ object TextCache {
     // two fixture dirs never collide under one session root
     val path = s"${root(spark)}/${md5hex(sfDir)}/$form"
     build.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    Sources.readParquet(spark, path)
   }
 
   private def getOrMaterialize(spark: SparkSession, sfDir: String,

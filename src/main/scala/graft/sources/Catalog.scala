@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Dataset-catalog listing — the Spark-native analog of the reference
   * client's `list` (the HawaiiDataPipeline gem enumerated a Socrata
@@ -19,21 +20,26 @@ object Catalog {
     StructField("n_cols", IntegerType),
     StructField("schema_ddl", StringType)))
 
-  /** List the `*.parquet` tables under `dir` with their schemas (schemas
-    * read from parquet footers — metadata only, no data scan).
+  /** List the `*.parquet` tables under `dir` with their schemas. Each
+    * schema is one footer read on the driver ([[Sources.parquetSchema]])
+    * and the rows become a local frame, so listing runs no Spark job.
+    * Footers are converted with TIMESTAMP(NANOS) read as long (the
+    * `events` fixture's older encoding), from a private conf copy: the
+    * session's own `nanosAsLong` never changes.
     */
   def list(spark: SparkSession, dir: String): DataFrame = {
-    // parquet TIMESTAMP(NANOS) footers (events) are unreadable without the
-    // legacy flag — scope it to the footer reads and restore afterwards so
-    // a listing call never changes how the session reads other parquet
-    val confKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "true")
-    try listImpl(spark, dir)
-    finally prior match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    }
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = Sources.nanosAsLongConf(spark)
+    val rows = fs.listStatus(p).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val path = st.getPath.toString
+        val s = Sources.parquetSchema(spark, path, conf)
+        Row(st.getPath.getName.stripSuffix(".parquet"), path, s.size, s.toDDL)
+      }
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Sorted table names under `dir` — the exact row order of [[list]]
@@ -47,21 +53,5 @@ object Catalog {
     fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).sorted
       .map(_.stripSuffix(".parquet"))
-  }
-
-  private def listImpl(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tables = fs.listStatus(p).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map { st =>
-        val path = st.getPath.toString
-        val s = spark.read.parquet(path).schema
-        org.apache.spark.sql.Row(
-          st.getPath.getName.stripSuffix(".parquet"), path, s.size, s.toDDL)
-      }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(tables, 1), schema)
   }
 }

@@ -154,7 +154,7 @@ class GraftClient(spark: SparkSession, dir: String) {
       case "events" => Tables.events(spark, dir)
       case "documents" => Tables.documents(spark, dir)
       case "embeddings" => Tables.embeddings(spark, dir)
-      case other => spark.read.parquet(s"$dir/$other.parquet")
+      case other => Sources.readParquet(spark, s"$dir/$other.parquet")
     }
     Soql(base, params)
   }

@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   * the upsert version, so among colliding rows the newest wins
   * deterministically.
   *
+  * The cache is read once per refresh: its footer schema comes from a
+  * driver-side read ([[Sources.readParquet]]), and the same frame serves
+  * the watermark `max` and the upsert base.
+  *
   * At 100 TB: the cache is the big, partitioned side; the delta is a
   * day's changes. [[Upsert.apply]] is a one-shuffle union + keyed window —
   * no join — and [[Sources.replaceParquet]] materializes the merge to a
@@ -55,13 +59,20 @@ object PortalSync {
     * cache is absent or empty (→ caller does a full fetch).
     */
   def cachedWatermark(spark: SparkSession, cachePath: String,
-                      watermarkCol: String): Option[Any] = {
+                      watermarkCol: String): Option[Any] =
+    readCache(spark, cachePath).flatMap(watermark(_, watermarkCol))
+
+  /** The parquet cache at `cachePath`, or None when it does not exist. */
+  private def readCache(spark: SparkSession,
+                        cachePath: String): Option[DataFrame] = {
     val hPath = new org.apache.hadoop.fs.Path(cachePath)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hPath)) None
-    else Option(
-      spark.read.parquet(cachePath).agg(max(col(watermarkCol))).head.get(0))
+    else Some(Sources.readParquet(spark, cachePath))
   }
+
+  private def watermark(cache: DataFrame, watermarkCol: String): Option[Any] =
+    Option(cache.agg(max(col(watermarkCol))).head.get(0))
 
   /** Single-writer discipline (round 9): two concurrent refreshes on one
     * cachePath could interleave [[Sources.replaceParquet]]'s staged swap
@@ -113,11 +124,12 @@ object PortalSync {
               fetchDelta: String => DataFrame): DataFrame = {
     require(keys.nonEmpty, "refresh needs at least one key column")
     withCacheLock(spark, cachePath) {
-      cachedWatermark(spark, cachePath, watermarkCol) match {
+      // one read of the cache serves both the watermark and the base
+      readCache(spark, cachePath).flatMap(base =>
+        watermark(base, watermarkCol).map(base -> _)) match {
         case None =>
           Sources.materialize(spark, fetchFull(), cachePath)
-        case Some(wm) =>
-          val base = spark.read.parquet(cachePath)
+        case Some((base, wm)) =>
           val delta =
             fetchDelta(s"$watermarkCol >= ${renderLiteral(wm)}")
           if (delta.isEmpty) base

@@ -1,7 +1,14 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
 /** Ingest/egress surface (SURVEY §2.3): the reference consumed Socrata
   * JSON/CSV exports and cached CSV locally; the Spark-native equivalents
@@ -12,6 +19,99 @@ import org.apache.spark.sql.types.StructType
   * inference pass is a full extra read of the data).
   */
 object Sources {
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * with no Spark job. Spark's inference (default `mergeSchema=false`)
+    * also reads exactly one footer — the first data file of the sorted
+    * recursive listing — but always runs that read as a one-task job;
+    * this is the same footer read done directly. The data file is picked
+    * the way Spark's file index lists it (path components starting with
+    * `_` or `.` are skipped, so `_SUCCESS`, `.crc` files and hidden
+    * staging siblings never count), the footer is converted with the
+    * same `ParquetToSparkSchemaConverter` settings inference uses, and
+    * every field is made nullable, as file relations do. Hive partition
+    * columns are not part of the result: [[readParquet]] lets Spark
+    * append them from the directory names.
+    *
+    * `mergeSchema` is not honoured. A layout Spark reads through another
+    * index (a streaming sink's `_spark_metadata` log, parquet summary
+    * files) or a path with no listable data file falls back to Spark's
+    * own inference under the session conf, so those cases keep Spark's
+    * result and error.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
+    parquetSchema(spark, path, spark.sessionState.conf)
+
+  /** [[parquetSchema]] with the converter settings (binary-as-string,
+    * INT96, timestamp-NTZ, nanos-as-long) taken from `conf`, e.g. a
+    * [[nanosAsLongConf]] copy. */
+  def parquetSchema(spark: SparkSession, path: String,
+                    conf: SQLConf): StructType = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    firstDataFile(root.getFileSystem(hadoopConf), root) match {
+      case None => spark.read.parquet(path).schema
+      case Some(file) =>
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            conf.parquetReaderRespectUnknownTypeAnnotation)
+        val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hadoopConf), SKIP_ROW_GROUPS))
+        nullable(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+          .asInstanceOf[StructType]
+    }
+  }
+
+  /** A copy of the session's SQL conf with
+    * `spark.sql.legacy.parquet.nanosAsLong` on, for [[parquetSchema]]
+    * reads of TIMESTAMP(NANOS) footers. The session conf itself is never
+    * touched, so a concurrent reader never sees the flag flip. */
+  def nanosAsLongConf(spark: SparkSession): SQLConf = {
+    val c = spark.sessionState.conf.clone()
+    c.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+    c
+  }
+
+  /** `spark.read.parquet(path)` with the schema from [[parquetSchema]]:
+    * the same frame, without the footer-inference job. Spark still lists
+    * the files and appends Hive partition columns. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The first data file Spark's inference reads, or None where Spark
+    * must decide: no data file, summary files or a sink log. */
+  private def firstDataFile(fs: FileSystem, root: Path): Option[FileStatus] = {
+    // InMemoryFileIndex's name filter: `_`/`.` prefixes (except `k=v`
+    // partition dirs) and in-flight `._COPYING_` copies are not data
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")
+    def special(name: String): Boolean = name == "_spark_metadata" ||
+      name.startsWith("_metadata") || name.startsWith("_common_metadata")
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory || special(st.getPath.getName)) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(c => special(c.getPath.getName) || !hidden(c.getPath.getName))
+        .flatMap(walk)
+    val files =
+      try walk(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (files.exists(f => special(f.getPath.getName))) None
+    else files.minByOption(_.getPath.toString)
+  }
+
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 
   def readCsv(spark: SparkSession, path: String, schema: StructType,
               header: Boolean = true): DataFrame =
@@ -91,7 +191,7 @@ object Sources {
     cacheFormat match {
       case "parquet" =>
         writeParquet(df, path)
-        spark.read.parquet(path)
+        readParquet(spark, path)
       case "csv" =>
         writeCsv(df, path)
         spark.read.option("header", "true").option("inferSchema", "true")
@@ -131,7 +231,7 @@ object Sources {
     if (fs.exists(hPath)) step(fs.rename(hPath, old), s"park of $path")
     step(fs.rename(staging, hPath), s"promote of $staging")
     fs.delete(old, true) // best-effort; next call clears a leftover
-    spark.read.parquet(path)
+    readParquet(spark, path)
   }
 
   /** Small-file compaction — the maintenance pass every long-lived table
@@ -187,7 +287,7 @@ object Sources {
       step(fs.delete(staging, true), s"cleanup of stale $staging")
     val bytes = fs.getContentSummary(hPath).getLength
     val files = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(path).coalesce(files)
+    readParquet(spark, path).coalesce(files)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     step(fs.rename(hPath, old), s"park of $path")
     step(fs.rename(staging, hPath), s"promote of $staging")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -56,6 +56,23 @@ class PortalSyncSpec extends SparkSpec {
     assertSame(refreshed, df(v2))
     // and the cache file itself holds the merged state
     assertSame(spark.read.parquet(cache), df(v2))
+  }
+
+  test("warm refresh with a delta reads the cache once: 5 Spark jobs") {
+    val tableDir = java.nio.file.Files.createTempDirectory("psync-jobs")
+      .toString
+    val cache = tmp("psync-jobs-cache")
+    df(v1).write.parquet(s"$tableDir/ds.parquet")
+    val client = new GraftClient(spark, tableDir)
+    client.refreshCache("ds", cache, Seq("id"), "updated_at")
+    df(v2).write.mode("overwrite").parquet(s"$tableDir/ds.parquet")
+    // watermark max, delta.isEmpty probe, the staged write (its job and
+    // the rewritten plan's) and nothing else: no footer-inference job on
+    // the cache, before or after the swap
+    val (refreshed, jobs) = JobCount(spark)(
+      client.refreshCache("ds", cache, Seq("id"), "updated_at"))
+    assertSame(refreshed, df(v2))
+    assert(jobs == 5, s"warm refresh ran $jobs jobs")
   }
 
   test("local twin: fetchSince filters at-or-past the watermark and ANDs " +

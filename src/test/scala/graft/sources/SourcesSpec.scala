@@ -1,6 +1,7 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
+import graft.{JobCount, SparkSpec, Tables}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -94,6 +95,134 @@ class SourcesSpec extends SparkSpec {
     val li = cat.find(_.getString(0) == "lineitem").get
     assert(li.getInt(2) == 11)
     assert(li.getString(3).contains("l_orderkey"))
+  }
+
+  private val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Runs `body` with the session's nanosAsLong set to `v` (None = unset),
+    * restoring the prior setting afterwards. */
+  private def withNanosAsLong[A](v: Option[String])(body: => A): A = {
+    val prior = spark.conf.getOption(nanosKey)
+    v.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
+    try body
+    finally prior.fold(spark.conf.unset(nanosKey))(spark.conf.set(nanosKey, _))
+  }
+
+  /** The footer read must agree with Spark's own inference exactly:
+    * both succeed with equal schemas, or both fail with the same
+    * exception class. `parquetSchema` itself is the inferred schema
+    * without the Hive partition columns, which Spark appends last. */
+  private def assertSameSchema(path: String): Unit = {
+    def attempt(f: => DataFrame) =
+      scala.util.Try(f.schema).toEither.left.map(_.getClass)
+    val inferred = attempt(spark.read.parquet(path))
+    assert(attempt(Sources.readParquet(spark, path)) == inferred, path)
+    inferred.foreach(s => assert(
+      s.fields.startsWith(Sources.parquetSchema(spark, path).fields), path))
+  }
+
+  /** A one-row events-shaped file whose `ts` is parquet TIMESTAMP(NANOS),
+    * written through parquet's example writer (Spark cannot write one). */
+  private def writeNanosEvents(path: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$path/part-00000.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1500000000123456789L)
+      .append("user_id", 7L).append("event_type", "view")
+      .append("value", 2.5).append("props", "{}"))
+    finally w.close()
+  }
+
+  test("readParquet's footer schema equals Spark's inferred schema for " +
+    "every fixture table, with nanosAsLong unset and on") {
+    val nanosDir = tmp()
+    writeNanosEvents(s"$nanosDir/events.parquet")
+    for (v <- Seq(None, Some("true"))) withNanosAsLong(v) {
+      Tables.all.foreach(t => assertSameSchema(s"$sfDir/$t.parquet"))
+      assertSameSchema(s"$nanosDir/events.parquet")
+    }
+    // the NANOS footer only converts with the flag on; both sides agree
+    withNanosAsLong(Some("true")) {
+      assert(Sources.readParquet(spark, s"$nanosDir/events.parquet")
+        .schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    }
+    withNanosAsLong(None) {
+      assert(scala.util.Try(
+        Sources.parquetSchema(spark, s"$nanosDir/events.parquet")).isFailure)
+      // Tables.events probes that footer with its own conf copy and
+      // truncates the nanos to micros
+      val ts = Tables.events(spark, nanosDir).collect().head
+        .getAs[java.sql.Timestamp]("ts").toInstant
+      assert(ts == java.time.Instant.ofEpochSecond(1500000000L, 123456000L))
+    }
+  }
+
+  test("readParquet keeps Hive partition columns and skips _SUCCESS, " +
+    ".crc and hidden staging files and siblings") {
+    val dir = tmp()
+    val docs = Tables.documents(spark, sfDir)
+    Sources.writePartitioned(docs, s"$dir/by_lang", Seq("lang"))
+    assertSameSchema(s"$dir/by_lang")
+    val byLang = Sources.readParquet(spark, s"$dir/by_lang")
+    assert(byLang.columns.last == "lang")
+    assert(byLang.count() == docs.count())
+
+    // a plain write holds _SUCCESS and .crc files; add a hidden staging
+    // dir and a `_` dir whose files sort first and have another schema,
+    // plus a stale `.t.replacing` sibling
+    val t = s"$dir/t"
+    Sources.writeParquet(Tables.nation(spark, sfDir), t)
+    val names = new java.io.File(t).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")),
+      names)
+    Sources.writeParquet(Tables.region(spark, sfDir), s"$t/.x.replacing")
+    Sources.writeParquet(Tables.region(spark, sfDir), s"$t/_tmp")
+    Sources.writeParquet(Tables.region(spark, sfDir), s"$dir/.t.replacing")
+    assertSameSchema(t)
+    assert(Sources.parquetSchema(spark, t).fieldNames.toSeq ==
+      Tables.nationSchema.fieldNames.toSeq)
+
+    // the output of an in-place replace reads back the same way
+    val replaced = Sources.replaceParquet(spark,
+      Sources.readParquet(spark, t).withColumn("n_x", lit(1L)), t)
+    assertSameSchema(t)
+    assert(replaced.schema == spark.read.parquet(t).schema)
+    assert(replaced.count() == 25)
+  }
+
+  test("catalog rows equal rows built from Spark's inferred schemas") {
+    val expected = withNanosAsLong(Some("true")) {
+      new java.io.File(sfDir).listFiles().toSeq
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .map { f =>
+          val path = s"file:${f.getPath}"
+          val s = spark.read.parquet(path).schema
+          Row(f.getName.stripSuffix(".parquet"), path, s.size, s.toDDL)
+        }
+    }
+    assert(Catalog.list(spark, sfDir).collect().toSeq == expected)
+  }
+
+  test("Catalog.list runs no Spark job and leaves the session's " +
+    "nanosAsLong untouched") {
+    withNanosAsLong(None) {
+      val (rows, jobs) = JobCount(spark)(Catalog.list(spark, sfDir).collect())
+      assert(rows.length == Tables.all.size)
+      assert(jobs == 0, s"Catalog.list ran $jobs jobs")
+      assert(spark.conf.get(nanosKey) == "false")
+    }
   }
 
   test("partitioned write prunes directories on the partition key") {
