@@ -18,10 +18,18 @@ import org.apache.spark.sql.SparkSession
   *  - 64 MiB broadcast threshold: dims up to `part`/`customer` size
   *    broadcast; beyond that a shuffle join is genuinely cheaper;
   *  - UTC session timezone: timestamp determinism across engines is part
-  *    of the oracle contract (SURVEY §7.2).
+  *    of the oracle contract (SURVEY §7.2);
+  *  - a 1000-entry codegen cache (Spark's default is 100): a session's
+  *    working set of generated classes — every stage of every query and
+  *    request shape it serves — is larger than 100, and an evicted class
+  *    is compiled again on its next use. The cache key is (the thread's
+  *    context class loader, the source), and the size is a JVM-wide
+  *    static: whichever session generates code first fixes it.
   *
   * `GraftExtensions` is injected, so `sorted_intersect_size` and the SoQL
-  * geo trio work in SQL strings (`$where`) out of the box.
+  * geo trio work in SQL strings (`$where`) out of the box, and filter
+  * comparison constants reach generated code by reference (one compile
+  * per request shape, not per request).
   */
 object GraftSession {
 
@@ -34,6 +42,7 @@ object GraftSession {
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
     "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
     "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
   /** A builder pre-loaded with [[recommendedConfs]]; callers may still

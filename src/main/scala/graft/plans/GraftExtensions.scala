@@ -4,6 +4,8 @@ import graft.expressions.{SortedIntersectSize, SortedJaccard}
 import org.apache.spark.sql.{GraftColumn, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.DoubleType
 
 /** Session extension registering graft's custom expressions as SQL
@@ -18,19 +20,34 @@ import org.apache.spark.sql.types.DoubleType
   * Two entry points:
   *  - cluster-wide: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
   *    (the standard `SparkSessionExtensions` injection path);
-  *  - per-session: `GraftExtensions.register(spark)` on a live session.
+  *  - per-session: `GraftExtensions.register(spark)` on a live session
+  *    (functions only — the physical rule below needs the injection path).
   *
   * No custom optimizer `Rule` is injected — SURVEY §7.3: Catalyst's
-  * built-ins cover every declared query. One custom `SparkStrategy` exists
-  * where a whole OPERATOR (not a rewrite) earns its keep:
-  * [[graft.plans.TopKStrategy]] plans per-key top-k as partial/final
-  * bounded heaps (map-side combine the Window formulation cannot do); it
-  * registers on `spark.experimental.extraStrategies` via `TopK.perKey`
-  * rather than here, so plain sessions keep stock planning.
+  * built-ins cover every declared query. One PHYSICAL rule is:
+  * [[ParameterizeFilterConstants]], as a pre-columnar-transition rule.
+  * A client session's requests share a few shapes but carry new `$where`
+  * constants each time; Spark splices those constants into the generated
+  * Java source, so every request would compile its stages again. The rule
+  * passes filter comparison constants by reference instead, so generated
+  * code — and its compile — depends on the shape only. Logical plans,
+  * pushdown and `explain` text are untouched.
+  *
+  * One custom `SparkStrategy` exists where a whole OPERATOR (not a
+  * rewrite) earns its keep: [[graft.plans.TopKStrategy]] plans per-key
+  * top-k as partial/final bounded heaps (map-side combine the Window
+  * formulation cannot do); it registers on
+  * `spark.experimental.extraStrategies` via `TopK.perKey` rather than
+  * here, so plain sessions keep stock planning.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.all.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] =
+        ParameterizeFilterConstants
+    })
+  }
 }
 
 object GraftExtensions {

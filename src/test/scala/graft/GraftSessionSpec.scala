@@ -10,6 +10,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.sql.adaptive.enabled") == "true")
     assert(c("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c("spark.sql.session.timeZone") == "UTC")
+    assert(c("spark.sql.codegen.cache.maxEntries") == "1000")
     assert(c("spark.sql.extensions") == "graft.plans.GraftExtensions")
   }
 
